@@ -36,7 +36,7 @@ SPAN_FS = '\x1f'   # field separator inside one span record
 def pack_word_spans(zone) -> str:
     """Serialize word spans to the packed single-string form.
 
-    One record per word, preorder (same order as ``flatten_word_zones``):
+    One record per word zone, in preorder of the zone tree:
     ``x0 FS y0 FS x1 FS y1 FS text`` joined by RS. Text is the last
     field so it may contain anything except the two separator bytes,
     which are replaced with U+FFFD (the emitters escape C0 controls, so
@@ -52,10 +52,9 @@ def pack_word_spans(zone) -> str:
 
 
 def _pack_walk(z: Zone, recs: List[str]) -> None:
-    """Single fused preorder walk emitting one packed record per word
-    zone — same visit order, leaf rule and coordinate formatting as
-    ``flatten_word_zones`` + the packing loop it replaces (pinned by
-    the packed-vs-struct equivalence tests)."""
+    """Preorder walk emitting one packed record per word zone, with
+    ``flatten_zone``'s leaf rule and integer coordinates (pinned by the
+    packed-vs-struct equivalence tests)."""
     if z.type == ZONE_WORD:
         leaf = ''.join(c for c in z.children if isinstance(c, str)) or None
         x0, y0, x1, y1 = z.bbox
@@ -90,37 +89,6 @@ def flatten_zone(zone: Zone) -> List[tuple]:
                 i += 1
 
     walk(zone, 0, ())
-    return spans
-
-
-def flatten_word_zones(zone: Zone) -> List[tuple]:
-    """Word-only span list, same tuple shape as ``flatten_zone``.
-
-    The words-mode Arrow pruning knob: consumers like
-    ``pipeline.word_spans`` filter to word zones and read only
-    bbox + text + order, so shipping page/line/para spans (and the
-    per-span ``path`` array — the one nested list in the struct) is
-    pure Arrow transfer cost. Word order is preorder, identical to the
-    filtered ``flatten_zone`` output; ``path`` is None. Intended for
-    ``details='words'`` runs (word zones under chars detail carry
-    their text in child zones, same as flatten_zone's leaf rule).
-    """
-    spans: List[tuple] = []
-
-    def walk(z: Zone, depth: int):
-        if z.type == ZONE_WORD:
-            leaf = ''.join(
-                c for c in z.children if isinstance(c, str)) or None
-            x0, y0, x1, y1 = z.bbox
-            spans.append((
-                ZONE_NAME[ZONE_WORD], depth, None,
-                int(x0), int(y0), int(x1), int(y1), leaf,
-            ))
-        for child in z.children:
-            if isinstance(child, Zone):
-                walk(child, depth + 1)
-
-    walk(zone, 0)
     return spans
 
 

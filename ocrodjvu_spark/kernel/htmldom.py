@@ -1,8 +1,22 @@
-"""Lenient HTML -> element-tree parser built on the stdlib html.parser.
+"""Lenient HTML -> element-tree parser built on the stdlib.
 
 Produces ``xml.etree.ElementTree`` elements with lxml-compatible accessors
-used by the scan kernel (``text``/``tail``/iteration/``get``). Reproduces
-the libxml2 recovery behaviors the hOCR corpus depends on:
+used by the scan kernel (``text``/``tail``/iteration/``get``).
+``parse_html`` picks one of three paths from the input alone:
+
+1. well-formed XML -- what Tesseract and most hOCR writers emit -- is
+   parsed by expat into the C TreeBuilder, with no Python per token. The
+   tree is kept only when guards prove it is the tree ``_TreeBuilder``
+   would build: each guard rules out one recovery rule below or one
+   place where XML decodes text differently from HTML (see
+   ``_parse_xml``);
+2. everything else goes through a regex tokenizer (``_fast_feed``)
+   feeding ``_TreeBuilder``;
+3. if that tokenizer raises, the stdlib html.parser feeds the same
+   builder.
+
+``_TreeBuilder`` reproduces the libxml2 recovery behaviors the hOCR
+corpus depends on:
 
 * void elements (meta, img, br, ...) never take children;
 * a block-level start tag (p, h1-h6, div, ul, table, ...) implicitly
@@ -26,6 +40,7 @@ from __future__ import annotations
 
 import html
 import html.parser
+import operator
 import re
 import xml.etree.ElementTree as ET
 
@@ -441,15 +456,188 @@ def _emit_starttag(builder: '_TreeBuilder', name: str, attr_text: str,
     return _consume_script(builder, text, pos, n)
 
 
+_XHTML = '{http://www.w3.org/1999/xhtml}'
+_XML_LANG = '{http://www.w3.org/XML/1998/namespace}lang'
+_XML_DECL_RE = re.compile(r'<\?xml\s[^>]*\?>')
+# DOCTYPE without an internal subset: a '[' matches no alternative
+_DOCTYPE_RE = re.compile(r'<!DOCTYPE(?:[^\[>"\']|"[^"]*"|\'[^\']*\')*>')
+_CHARREF_RE = re.compile(r'&#([xX][0-9a-fA-F]+|[0-9]+);')
+_TAG_NAME_OK = re.compile(r'[a-z][-a-z0-9._]*').fullmatch
+_ATTR_NAME_OK = re.compile(r'[-a-z0-9._:]+').fullmatch
+_TAG = operator.attrgetter('tag')
+_ATTRIB = operator.attrgetter('attrib')
+
+
+def _charrefs_agree(text: str) -> bool:
+    """False if some numeric character reference decodes differently
+    under html.unescape (cp1252 remap of 0x80-0x9F, dropped 0x7F and
+    noncharacters) than under XML's chr(), or is a tab/newline (which
+    would defeat the attribute-whitespace count in ``_parse_xml``)."""
+    for m in _CHARREF_RE.finditer(text):
+        ref = m.group(1)
+        if len(ref) > 12:
+            return False  # no int() on absurd digit runs
+        n = int(ref[1:], 16) if ref[0] in 'xX' else int(ref)
+        if (n == 9 or n == 10 or 0x7F <= n <= 0x9F
+                or 0xFDD0 <= n <= 0xFDEF or n & 0xFFFE == 0xFFFE):
+            return False
+    return True
+
+
+def _declarations_ok(text: str) -> bool:
+    """Raw-text guards for markup the XML parser reads differently.
+
+    Rejects any processing instruction other than a leading XML
+    declaration (``_fast_feed`` ends a PI at its first '>'), CDATA
+    sections (merged into text by XML, skipped by the tokenizers), and
+    a DOCTYPE with an internal subset (expat would apply its ENTITY and
+    ATTLIST declarations; rejecting it also rules out entity expansion)
+    or with a '>' inside a quoted literal (the tokenizers end the
+    declaration there).
+    """
+    pos = text.find('<?')
+    if pos == 0:
+        m = _XML_DECL_RE.match(text)
+        if m is None:
+            return False
+        pos = text.find('<?', m.end())
+    if pos >= 0:
+        return False
+    pos = text.find('<!')
+    while pos >= 0:
+        if text.startswith('<!--', pos):
+            end = text.find('-->', pos + 4)
+            if end < 0:
+                return False
+            pos = text.find('<!', end + 3)
+            continue
+        m = _DOCTYPE_RE.match(text, pos)
+        if m is None or m.group().count('>') != 1:
+            return False  # CDATA, internal subset, '>' in a literal
+        pos = text.find('<!', m.end())
+    return True
+
+
+def _parse_xml(text: str):
+    """The C path: expat + the C TreeBuilder, or None to fall back.
+
+    The tree is returned only when it is provably the tree
+    ``_TreeBuilder`` builds from the same text. Each guard below rules
+    out one of its recovery rules or one XML-vs-HTML decoding
+    difference; anything else (including every ParseError) returns
+    None and the caller tokenizes in Python as before.
+    """
+    # -- raw text, before parsing --------------------------------------
+    # XML folds \r\n to \n; a BOM is swallowed by expat but is stray
+    # root-level text (a synthetic <body>) to _TreeBuilder
+    if '\r' in text or text[:1] == '\ufeff':
+        return None
+    if not _declarations_ok(text):
+        return None
+    if '&#' in text and not _charrefs_agree(text):
+        return None
+    xmlns = text.find('xmlns')
+    if xmlns >= 0 and (text[xmlns + 5:xmlns + 6] == ':'
+                       or text.find('xmlns', xmlns + 5) >= 0):
+        return None  # a prefix, or more than one namespace declaration
+    try:
+        data = text.encode('utf-8')
+        # encoding= overrides any encoding= in the XML declaration: the
+        # text is already decoded
+        parser = ET.XMLParser(target=ET.TreeBuilder(insert_comments=True),
+                              encoding='utf-8')
+        parser.feed(data)
+        root = parser.close()
+    except Exception:  # ParseError, surrogates, ...
+        return None
+
+    # -- the parsed tree -------------------------------------------------
+    # (whole-tree checks run as C-level maps over one element list; a
+    # Python loop per element would cost as much as the parse)
+    elements = list(root.iter())
+    if root.tag == _XHTML + 'html':
+        # the single declaration is Tesseract's root-level XHTML
+        # default namespace: strip it from every tag and restore the
+        # attributes html.parser would have kept
+        cut = len(_XHTML)
+        for e in elements:
+            tag = e.tag
+            if tag.__class__ is str and tag.startswith(_XHTML):
+                e.tag = tag[cut:]
+        attrib = {'xmlns': _XHTML[1:-1]}
+        for k, v in root.attrib.items():
+            attrib['xml:lang' if k == _XML_LANG else k] = v
+        root.attrib = attrib
+    elif root.tag != 'html' or xmlns >= 0:
+        return None
+    # a tab or newline inside a quoted attribute value is folded to a
+    # space by XML: require every raw one inside the root element to
+    # survive as text (a newline between attributes falls back too)
+    inner = ''.join(root.itertext())
+    start, end = text.find('<html'), text.rfind('>') + 1
+    if (inner.count('\n') != text.count('\n', start, end)
+            or ('\t' in text
+                and inner.count('\t') != text.count('\t', start, end))):
+        return None
+    tags = list(map(_TAG, elements))
+    names = set(tags)
+    names.discard(ET.Comment)
+    sections = [child.tag for child in root]
+    if (sections not in (['head', 'body'], ['head'], ['body'], [])
+            or tags.count('html') != 1
+            or tags.count('head') + tags.count('body') != len(sections)
+            or 'script' in names
+            or not all(map(_TAG_NAME_OK, names))
+            or not all(map(_ATTR_NAME_OK,
+                           set().union(*map(_ATTRIB, elements))))):
+        return None
+    # _TreeBuilder keeps a self-closed <head/>/<body/> open, and drops
+    # blank text at the root (non-blank text opens a synthetic <body>)
+    if root.text is not None:
+        if not root.text.isspace():
+            return None
+        root.text = None
+    for section in root:
+        if not len(section) and section.text is None:
+            return None
+        if section.tail is not None:
+            if not section.tail.isspace():
+                return None
+            section.tail = None
+    # the implied-close and void-element recovery rules never fire
+    if 'p' in names:
+        for tag in _P_CLOSERS.intersection(names):
+            if root.find('.//p//' + tag) is not None:
+                return None
+    for tag in _SELF_NESTING_CLOSERS.intersection(names):
+        if root.find(f'.//{tag}//{tag}') is not None:
+            return None
+    for tag in VOID_ELEMENTS.intersection(names):
+        for e in root.iter(tag):
+            if e.text is not None or len(e):
+                return None
+    return root
+
+
 def parse_html(text: str, fast: bool = True) -> ET.Element:
     """Parse (possibly malformed) HTML text into an element tree root.
 
-    ``fast=True`` uses the regex tokenizer (same builder, same recovery
-    rules); any tokenizer error falls back to the stdlib html.parser.
-    Equivalence over the whole reference corpus is pinned by
-    tests/test_htmldom_fast.py.
+    ``fast=True`` chooses among three paths, from the input alone:
+
+    1. well-formed XML whose tree provably equals ``_TreeBuilder``'s
+       (see ``_parse_xml`` for the guards) is built by expat and the C
+       TreeBuilder;
+    2. anything else goes through the regex tokenizer (same builder,
+       same recovery rules);
+    3. any tokenizer error falls back to the stdlib html.parser.
+
+    ``fast=False`` takes path 3 only. Equivalence of the paths is
+    pinned by tests/test_htmldom_fast.py and tests/test_property.py.
     """
     if fast:
+        root = _parse_xml(text)
+        if root is not None:
+            return root
         builder = _TreeBuilder()
         try:
             _fast_feed(builder, text)

@@ -5,13 +5,17 @@
 * sexpr print -> parse round-trips arbitrary zone trees;
 * both HTML tokenizers agree on arbitrary tag-soup built from corpus
   vocabulary;
+* on well-formed documents, the expat path of ``parse_html`` builds the
+  html.parser tree and the same extraction output, or falls back;
 * UAX#29 boundaries are strictly increasing and end at len(text).
 """
 
 import string
+from unittest import mock
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import find, given, settings, strategies as st
 
+from ocrodjvu_spark.functions.extract import extract_one
 from ocrodjvu_spark.kernel import hocr, htmldom, sexpr
 from ocrodjvu_spark.kernel.segment import (
     simple_word_break_iterator, uax29_word_break_iterator)
@@ -97,6 +101,54 @@ def _canon(e):
 def test_tokenizers_agree(markup):
     assert _canon(htmldom.parse_html(markup, fast=True)) == \
         _canon(htmldom.parse_html(markup, fast=False))
+
+
+# well-formed documents: a random element tree under an html/head/body
+# wrapper, so expat accepts most of them. The pieces include XML-legal
+# markup that HTML recovery rebuilds (<p><div>, <li><li>, <br>x</br>,
+# &#150;, a newline inside an attribute), which the C path must refuse.
+_leaves = st.sampled_from([
+    'text', ' ', '\n', 'a\tb', '&amp;', '&#65;', '&#150;', '&lt;x&gt;',
+    '<!-- c -->', '<br/>', '<img src="x"/>',
+])
+_attrs = st.sampled_from([
+    '', ' class="ocr_page" title="bbox 0 0 99 99"',
+    ' class="ocr_line" title="bbox 1 2 30 40"',
+    ' class="ocrx_word" title="bbox 1 2 3 4; x_wconf 9"',
+    ' title="bbox 5 6 7 8"', ' title="a\nb"', " lang='en'",
+])
+_tags = st.sampled_from(['div', 'p', 'span', 'li', 'ul', 'br', 'b', 'h3'])
+_elements = st.recursive(
+    _leaves,
+    lambda kids: st.tuples(_tags, _attrs, st.lists(kids, max_size=4)).map(
+        lambda t: f'<{t[0]}{t[1]}>{"".join(t[2])}</{t[0]}>'),
+    max_leaves=30)
+_heads = st.sampled_from([
+    '<html><head><meta name="ocr-capabilities" '
+    'content="ocr_page ocr_line ocrx_word"/></head>',
+    "<html><head><meta name='ocr-system' content='tesseract 3.02'/>"
+    '</head>',
+    '<?xml version="1.0" encoding="UTF-8"?>\n<html xmlns="http://www.w3.'
+    'org/1999/xhtml" xml:lang="en">\n <head><title></title></head>\n',
+])
+documents = st.tuples(_heads, st.lists(_elements, max_size=4)).map(
+    lambda t: t[0] + '<body>' + ''.join(t[1]) + '</body>\n</html>\n')
+
+
+def test_documents_reach_both_paths():
+    find(documents, lambda d: htmldom._parse_xml(d) is not None
+         and '<p' in d)
+    find(documents, lambda d: htmldom._parse_xml(d) is None)
+
+
+@given(documents)
+@settings(max_examples=300, deadline=None)
+def test_c_path_agrees(doc):
+    assert _canon(htmldom.parse_html(doc)) == \
+        _canon(htmldom.parse_html(doc, fast=False))
+    fast = extract_one(doc)
+    with mock.patch.object(htmldom, '_parse_xml', lambda text: None):
+        assert extract_one(doc) == fast
 
 
 # -- segmentation invariants --------------------------------------------------
