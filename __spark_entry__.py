@@ -2361,8 +2361,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'dedup_substring_capped': _q_dedup_substring_capped,
         'checkpoint_resume': _q_checkpoint_resume,
         'corpus_split': _q_corpus_split,
+        # -- block 2: gates changed in round 7 (SimHash as explode +
+        #    64 SUM votes, the salted LM trigram exchange, the
+        #    shingle-family shared exchange, the flat embedding dot)
+        #    and since (extraction_metrics reads either span payload;
+        #    ``dot`` picks its chain from the Column), moved here so
+        #    they sit in the verdict window — 9 entries, slots 37-45
+        'extraction_metrics': _q_extraction_metrics,
+        'simhash': _q_simhash,
+        'dedup_simhash_pairs': _q_dedup_simhash_pairs,
+        'dedup_minhash_lsh': _q_dedup_minhash_lsh,
+        'ann_cosine_topk': _q_ann_cosine_topk,
+        'dedup_semantic': _q_dedup_semantic,
+        'lm_quality': _q_lm_quality,
+        'embedding_neardup_pairs': _q_embedding_neardup_pairs,
+        'embedding_neardup_auto': _q_embedding_neardup_auto,
         # -- block 3: previously verified, oldest verdict first
-        #    (r4 verdicts; 30 + 20 = the ~50-slot window) -------
+        #    (r4 verdicts; the first five fill the ~50-slot window) -
         'multimodal_frames': _q_multimodal_frames,
         'tool_call_stats': _q_tool_call_stats,
         'quality_buckets': _q_quality_buckets,
@@ -2379,8 +2394,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'streaming_extraction': _q_streaming_extraction,
         'streaming_dedup': _q_streaming_dedup,
         'stateful_conversation_state': _q_stateful_conversation_state,
-        'embedding_neardup_pairs': _q_embedding_neardup_pairs,
-        'embedding_neardup_auto': _q_embedding_neardup_auto,
         'extract_tesseract_makebox': _q_extract_tesseract_makebox,
         'extract_ocropus_surplus': _q_extract_ocropus_surplus,
         # -- outside the ~50-slot window: remaining r4-verified,
@@ -2392,7 +2405,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'events_sessionization': _q_events_sessionization,
         'lineitem_pricing_summary': _q_lineitem_pricing_summary,
         'orders_per_nation': _q_orders_per_nation,
-        'lm_quality': _q_lm_quality,
         'dedup_substring_spans': _q_dedup_substring_spans,
         'dedup_substring_apply': _q_dedup_substring_apply,
         'dedup_cluster_apply': _q_dedup_cluster_apply,
@@ -2403,7 +2415,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'error_channel': _q_error_channel,
         'turns_per_conv': _q_turns_per_conv,
         'conversation_reassembly': _q_conversation_reassembly,
-        'extraction_metrics': _q_extraction_metrics,
         'dedup_exact': _q_dedup_exact,
         'length_quantiles': _q_length_quantiles,
         'dedup_apply': _q_dedup_apply,
@@ -2417,19 +2428,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'conversation_packing': _q_conversation_packing,
         'dedup_conversations': _q_dedup_conversations,
         'token_stats': _q_token_stats,
-        'dedup_minhash_lsh': _q_dedup_minhash_lsh,
         'dedup_ngram_jaccard': _q_dedup_ngram_jaccard,
         'dedup_clusters': _q_dedup_clusters,
-        'simhash': _q_simhash,
-        'dedup_simhash_pairs': _q_dedup_simhash_pairs,
         'language_id': _q_language_id,
         'language_id_ngram': _q_language_id_ngram,
         'tfidf_top_terms': _q_tfidf_top_terms,
         'quality_score': _q_quality_score,
         'doc_fingerprint': _q_doc_fingerprint,
-        'ann_cosine_topk': _q_ann_cosine_topk,
         'embedding_kmeans': _q_embedding_kmeans,
-        'dedup_semantic': _q_dedup_semantic,
         'embedding_quantize': _q_embedding_quantize,
         'semantic_clusters': _q_semantic_clusters,
         'ann_lsh_topk': _q_ann_lsh_topk,

@@ -17,8 +17,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..kernel import hocr_emit, sexpr
 from ..kernel.engines import gocr_scan, ocrad_scan
 from ..kernel.hocr import DETAILS_BY_NAME
-from ..schema import EXTRACT_RESULT
-from .extract import flatten_zone, zone_text
+from .extract import page_result, payload
 
 EMIT_RESULT = StructType([
     StructField('hocr', StringType()),
@@ -60,67 +59,41 @@ def make_emit_hocr_udf(uax29=None, full_document: bool = False):
     return emit_hocr
 
 
-def _zone_to_result(zone, dialect: str):
-    return {
-        'pages': [{
-            'spans': flatten_zone(zone),
-            'extracted_text': zone_text(zone),
-            'extracted_sexpr': zone.compact_sexpr(),
-        }],
-        'dialect': dialect,
-        'error': None,
-    }
+def _engine_extract_udf(scan, dialect: str, name: str, details: str,
+                        uax29, rotation: int, page_size):
+    """Engine text column -> EXTRACT_RESULT struct column: one page per
+    row, scanned by ``scan`` and tagged with ``dialect``."""
+    details_level = DETAILS_BY_NAME[details]
+    _, result_schema, _ = payload(True)
 
+    def extract_engine(texts: pd.Series) -> pd.DataFrame:
+        rows = []
+        for t in texts:
+            try:
+                if t is None:
+                    raise ValueError('null input')
+                zone = scan(t, details=details_level, uax29=uax29,
+                            page_size=page_size, rotation=rotation)
+                rows.append({'pages': [page_result(zone)],
+                             'dialect': dialect, 'error': None})
+            except Exception as exc:
+                rows.append({'pages': None, 'dialect': dialect,
+                             'error': f'{type(exc).__name__}: {exc}'})
+        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
 
-def _error_result(dialect: str, exc: Exception):
-    return {
-        'pages': None,
-        'dialect': dialect,
-        'error': f'{type(exc).__name__}: {exc}',
-    }
+    extract_engine.__name__ = name  # the UDF's name in plans and columns
+    return pandas_udf(result_schema)(extract_engine)
 
 
 def make_orf_extract_udf(details: str = 'words', uax29=None,
                          rotation: int = 0, page_size=(1000, 1000)):
     """ocrad ORF text column -> EXTRACT_RESULT struct column."""
-    details_level = DETAILS_BY_NAME[details]
-
-    @pandas_udf(EXTRACT_RESULT)
-    def extract_orf(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(_error_result('ocrad', ValueError('null input')))
-                continue
-            try:
-                zone = ocrad_scan(t, details=details_level, uax29=uax29,
-                                  page_size=page_size, rotation=rotation)
-                rows.append(_zone_to_result(zone, 'ocrad'))
-            except Exception as exc:
-                rows.append(_error_result('ocrad', exc))
-        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
-
-    return extract_orf
+    return _engine_extract_udf(ocrad_scan, 'ocrad', 'extract_orf',
+                               details, uax29, rotation, page_size)
 
 
 def make_gocr_extract_udf(details: str = 'words', uax29=None,
                           rotation: int = 0, page_size=(1000, 1000)):
     """gocr XML text column -> EXTRACT_RESULT struct column."""
-    details_level = DETAILS_BY_NAME[details]
-
-    @pandas_udf(EXTRACT_RESULT)
-    def extract_gocr(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(_error_result('gocr', ValueError('null input')))
-                continue
-            try:
-                zone = gocr_scan(t, details=details_level, uax29=uax29,
-                                 page_size=page_size, rotation=rotation)
-                rows.append(_zone_to_result(zone, 'gocr'))
-            except Exception as exc:
-                rows.append(_error_result('gocr', exc))
-        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
-
-    return extract_gocr
+    return _engine_extract_udf(gocr_scan, 'gocr', 'extract_gocr',
+                               details, uax29, rotation, page_size)

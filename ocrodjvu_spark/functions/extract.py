@@ -117,6 +117,43 @@ def zone_text(zone: Zone) -> str:
     return sep.join(parts)
 
 
+def payload(emit_spans):
+    """``(spans field, result schema, span encoder)`` of an ``emit_spans``
+    payload — the one place that maps the choice to its format:
+
+    * ``False``: no spans (``spans`` NULL, encoder None);
+    * ``'words'``: packed word spans, one delimited string per page in
+      ``spans_packed`` (the lowest-Arrow-volume spans path, decoded
+      JVM-side by ``pipeline.word_spans``);
+    * ``True``: full span structs of every zone level in ``spans``.
+
+    Any other value raises ``ValueError``.
+    """
+    if emit_spans is False:
+        return 'spans', EXTRACT_RESULT, None
+    if emit_spans is True:
+        return 'spans', EXTRACT_RESULT, flatten_zone
+    if emit_spans == 'words':
+        return 'spans_packed', EXTRACT_RESULT_PACKED, pack_word_spans
+    raise ValueError(
+        f"emit_spans must be False, 'words' or True, not {emit_spans!r}")
+
+
+def page_result(zone: Zone, emit_spans=True, emit_sexpr: bool = True):
+    """One page's PAGE_RESULT-shaped dict (PAGE_RESULT_PACKED for
+    ``emit_spans='words'``)."""
+    field, _, encode = payload(emit_spans)
+    return _page(zone, field, encode, emit_sexpr)
+
+
+def _page(zone: Zone, field: str, encode, emit_sexpr: bool):
+    return {
+        field: encode(zone) if encode else None,
+        'extracted_text': zone_text(zone),
+        'extracted_sexpr': zone.compact_sexpr() if emit_sexpr else None,
+    }
+
+
 def extract_one(
     markup,
     details: int = hocr.DETAILS_BY_NAME['words'],
@@ -129,10 +166,11 @@ def extract_one(
 ):
     """Extract one turn; returns the EXTRACT_RESULT-shaped dict.
 
-    ``emit_spans`` (True | False | 'words') / ``emit_sexpr`` skip or
-    prune those payloads (they dominate the Arrow transfer cost when a
-    query only needs text or word boxes).
+    ``emit_spans`` (see ``payload``) / ``emit_sexpr`` skip or prune
+    those payloads (they dominate the Arrow transfer cost when a query
+    only needs text or word boxes).
     """
+    field, _, encode = payload(emit_spans)
     if markup is None:
         return {'pages': None, 'dialect': None, 'error': 'null input'}
     settings = hocr.ExtractSettings(
@@ -146,25 +184,8 @@ def extract_one(
             'dialect': _dialect_name(settings),
             'error': f'{type(exc).__name__}: {exc}',
         }
-    pages = []
-    for zone in zones:
-        if emit_spans == 'packed' or emit_spans == 'words':
-            # both word-span modes ship the packed single-string form:
-            # one delimited record per word, decoded JVM-side by
-            # pipeline.word_spans — the lowest-Arrow-volume spans path
-            # (measured 9.5% faster than the array-of-structs form at
-            # 32 cores on the round-7 kernel)
-            page = {'spans_packed': pack_word_spans(zone)}
-        elif emit_spans:
-            page = {'spans': flatten_zone(zone)}
-        else:
-            page = {'spans': None}
-        page['extracted_text'] = zone_text(zone)
-        page['extracted_sexpr'] = (
-            zone.compact_sexpr() if emit_sexpr else None)
-        pages.append(page)
     return {
-        'pages': pages,
+        'pages': [_page(zone, field, encode, emit_sexpr) for zone in zones],
         'dialect': _dialect_name(settings),
         'error': None,
     }
@@ -197,9 +218,7 @@ def make_extract_udf(
     UDF result struct, so the pruning knob lives here).
     """
     details_level = hocr.DETAILS_BY_NAME[details]
-    result_schema = (EXTRACT_RESULT_PACKED
-                     if emit_spans in ('packed', 'words')
-                     else EXTRACT_RESULT)
+    _, result_schema, _ = payload(emit_spans)
 
     @pandas_udf(result_schema)
     def extract_turn(texts: pd.Series) -> pd.DataFrame:

@@ -29,16 +29,14 @@ def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast('double'))
 
 
-#: the corpus embedding width; ``dot_cols`` takes a codegen fast path
-#: for it
+#: the corpus embedding width; ``dot`` takes a codegen fast path for it
 EMBED_DIM = 64
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Float dot product (left-assoc zip_with fold). Safe for ANY
-    column expression: the arguments are lambda-bound and evaluated
-    once. Prefer ``dot_cols`` when both arguments are plain column
-    references."""
+def _fold(a: Column, b: Column) -> Column:
+    """Float dot product as a left-associative ``zip_with`` fold. Safe
+    for any column expression: the arguments are lambda-bound and
+    evaluated once."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
@@ -46,33 +44,40 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_cols(a: Column, b: Column) -> Column:
-    """Float dot product for plain COLUMN REFERENCES, identical to
-    ``dot`` (same left-associative addition order, so bit-identical
-    floats — verified result-equal on the gates).
+def dot(a: Column, b: Column) -> Column:
+    """Float dot product for all-pairs scoring.
 
-    For ``EMBED_DIM``-sized inputs the product-sum is a flat 64-term
-    element_at chain that runs in whole-stage codegen instead of an
-    interpreted per-element lambda (measured -17% on the brute-force
-    cosine top-k); other lengths (or NULL) fall back to the fold.
+    When both arguments are column references such as ``F.col('vec')``
+    (decided on the Column's expression), ``EMBED_DIM``-sized inputs take a flat 64-term
+    element_at chain that runs in whole-stage codegen rather than the
+    interpreted per-element lambda of ``_fold`` (measured -17% on the
+    brute-force cosine top-k). It adds in the same order, so the floats
+    are bit-identical (the fold's 0.0 seed only turns a -0.0 sum into
+    0.0); other lengths (or NULL) fall back to the fold. Computed
+    arguments always take the fold: the chain references each argument
+    ~65 times and Catalyst would inline the expression once per
+    reference (measured 2x SLOWER when ``_prep``'s cast transform
+    leaked into the chain), while the fold binds it once.
 
-    CALLERS MUST PASS ATTRIBUTES (e.g. ``F.col('vec')``), never
-    computed expressions: the chain references each argument ~65
-    times, and Catalyst would inline a non-trivial expression once per
-    reference (the no-CSE-for-expressions trap — measured 2x SLOWER
-    when ``_prep``'s cast transform leaked in here).
+    Norms and the IVF / LSH top-k, which score one product per vector or
+    few candidate pairs per query, call ``_fold`` directly: there the
+    chain's fixed build and codegen cost outweighs its per-pair saving
+    (measured 1.3-1.6x slower IVF top-k at 2k-16k vectors).
     """
+    if not all(c._jc.node().getClass().getSimpleName()
+               == 'UnresolvedAttribute' for c in (a, b)):
+        return _fold(a, b)
     flat = None
     for i in range(1, EMBED_DIM + 1):
         term = F.element_at(a, i) * F.element_at(b, i)
         flat = term if flat is None else flat + term
     return F.when(
         (F.size(a) == EMBED_DIM) & (F.size(b) == EMBED_DIM), flat
-    ).otherwise(dot(a, b))
+    ).otherwise(_fold(a, b))
 
 
 def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+    return F.sqrt(_fold(a, a))
 
 
 def hyperplane(j: int, dim: int = 64) -> Column:
@@ -120,7 +125,7 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
             'query_id',
             F.col(id_col).alias('neighbor_id'),
             F.round(
-                dot_cols(F.col('vec'), F.col('qvec'))
+                dot(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
         )
     )
@@ -211,7 +216,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
         queries.crossJoin(F.broadcast(centroids))
         .withColumn(
             'c_sim',
-            F.round(dot(F.col('qvec'), F.col('cvec'))
+            F.round(_fold(F.col('qvec'), F.col('cvec'))
                     / (F.col('qnrm') * F.col('cnrm')), 6))
         .withColumn('c_rank', F.row_number().over(probe_w))
         .where(F.col('c_rank') <= nprobe)
@@ -226,7 +231,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
             'query_id',
             F.col(id_col).alias('neighbor_id'),
             F.round(
-                dot(F.col('vec'), F.col('qvec'))
+                _fold(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
         )
     )
@@ -365,7 +370,7 @@ def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         candidates.join(ca, 'vec_a').join(cb, 'vec_b')
         .select(
             'vec_a', 'vec_b',
-            F.round(dot_cols(F.col('va'), F.col('vb'))
+            F.round(dot(F.col('va'), F.col('vb'))
                     / (F.col('na') * F.col('nb')), 6).alias('cos_sim'))
         .where(F.col('cos_sim') >= threshold)
     )
@@ -575,7 +580,7 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         a.join(b, ['cluster'])
         .where(F.col('vec_a') < F.col('vec_b'))
         .select('cluster', 'vec_a', 'vec_b',
-                F.round(dot_cols(F.col('va'), F.col('vb'))
+                F.round(dot(F.col('va'), F.col('vb'))
                         / (F.col('na') * F.col('nb')), 6).alias('cos_sim'))
         .where(F.col('cos_sim') >= threshold)
     )
@@ -664,7 +669,7 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
             'query_id',
             F.col(id_col).alias('neighbor_id'),
             F.round(
-                dot(F.col('vec'), F.col('qvec'))
+                _fold(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
         )
     )

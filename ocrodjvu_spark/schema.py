@@ -39,7 +39,7 @@ EXTRACT_RESULT = StructType([
     StructField('error', StringType()),
 ])
 
-# emit_spans='packed' variant: word spans ship as ONE delimited string
+# emit_spans='words' variant: word spans ship as ONE delimited string
 # per page (records joined by \x1E, fields x0 \x1F y0 \x1F x1 \x1F y1
 # \x1F text) instead of an array of 8-field structs. Arrow transfers a
 # single string buffer where the struct form carries offset + validity

@@ -238,14 +238,14 @@ def test_raw_sidecar_bucketed_resume(spark, tmp_path):
 def test_run_extraction_with_packed_spans_metrics(spark, tmp_path):
     # regression (review finding): the sidecar metrics aggregation
     # hardcoded F.col('spans') and crashed AFTER the data write when
-    # emit_spans='packed' flowed through extract_kwargs — n_spans must
+    # emit_spans='words' flowed through extract_kwargs — n_spans must
     # come from either emission shape
     out = str(tmp_path / 'out')
     side = str(tmp_path / 'side')
     tr = T.synthesize_transcripts(spark, '/root/testdata/sf0.001')
     done = checkpoint.run_extraction(
         spark, tr, out, side, n_buckets=4,
-        emit_spans='packed', emit_sexpr=False)
+        emit_spans='words', emit_sexpr=False)
     assert len(done) == 4
     side_df = spark.read.parquet(side)
     total_spans = side_df.agg(F.sum('n_spans')).first()[0]

@@ -71,6 +71,17 @@ def test_every_query_has_oracle_or_is_flagged():
     assert qs == oracles
 
 
+def test_changed_gates_sit_in_the_verdict_window():
+    # verdicts are recorded for about the first 50 queries() keys (see
+    # the ordering contract); changed gates must sit inside that window
+    first = list(entrymod.queries())[:50]
+    for name in ('extraction_metrics', 'simhash', 'dedup_simhash_pairs',
+                 'dedup_minhash_lsh', 'ann_cosine_topk', 'dedup_semantic',
+                 'lm_quality', 'embedding_neardup_pairs',
+                 'embedding_neardup_auto'):
+        assert name in first, name
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

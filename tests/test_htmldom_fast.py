@@ -277,7 +277,7 @@ def test_hundred_thousand_words_on_c_path():
     doc = _doc(f'<div class="ocr_page" title="bbox 0 0 1000 {n}">'
                + lines + '</div>', head=HOCR_HEAD)
     assert htmldom._parse_xml(doc) is not None
-    row = extract.extract_one(doc, emit_spans='packed')
+    row = extract.extract_one(doc, emit_spans='words')
     assert row['error'] is None
     [page] = row['pages']
     assert len(page['extracted_text'].split()) == n

@@ -167,7 +167,7 @@ def test_word_spans_order(spark):
 
 
 def test_packed_spans_match_struct_spans(spark):
-    # the packed word-span modes ('words'/'packed': one delimited
+    # the packed word-span mode ('words': one delimited
     # string per page, JVM-side decode) must reproduce the FULL struct
     # path (emit_spans=True, word_spans filters to word zones)
     # byte-for-byte on the synthetic corpus
@@ -177,7 +177,7 @@ def test_packed_spans_match_struct_spans(spark):
     a = pipeline.word_spans(
         pipeline.extract_turns(df, emit_spans=True, emit_sexpr=False))
     b = pipeline.word_spans(
-        pipeline.extract_turns(df, emit_spans='packed', emit_sexpr=False))
+        pipeline.extract_turns(df, emit_spans='words', emit_sexpr=False))
     assert a.columns == b.columns
     assert sorted(map(tuple, a.collect())) == \
         sorted(map(tuple, b.collect()))
@@ -202,7 +202,7 @@ def test_packed_spans_null_word_text_matches_struct(spark):
                                emit_spans=True, emit_sexpr=False))
     b = pipeline.word_spans(
         pipeline.extract_turns(df, details='chars',
-                               emit_spans='packed', emit_sexpr=False))
+                               emit_spans='words', emit_sexpr=False))
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b
@@ -222,7 +222,7 @@ def test_packed_spans_separator_bytes_in_word_text(spark):
     rows = [('c1', 1, 'user', markup, None, datetime.datetime(2025, 1, 1))]
     df = spark.createDataFrame(rows, schema=TRANSCRIPTS_DDL)
     packed = pipeline.word_spans(
-        pipeline.extract_turns(df, emit_spans='packed')).collect()
+        pipeline.extract_turns(df, emit_spans='words')).collect()
     struct = pipeline.word_spans(
         pipeline.extract_turns(df, emit_spans=True)).collect()
     assert sorted(map(tuple, packed)) == sorted(map(tuple, struct))
@@ -236,6 +236,68 @@ def test_packed_spans_separator_bytes_in_word_text(spark):
     rec = EX.pack_word_spans(Zone(ZONE_LINE, (1, 2, 3, 4), [w]))
     assert rec.count(EX.SPAN_FS) == 4 and EX.SPAN_RS not in rec
     assert rec.endswith('a�b�c')
+
+
+def test_extraction_metrics_reads_every_span_payload(spark):
+    # extraction_metrics used to read only the ``spans`` column and
+    # failed on the 'words' payload (``spans_packed``); n_spans counts
+    # the spans the payload carries: every zone / the words / none
+    def page(words):
+        return ('<div class="ocr_page" title="bbox 0 0 300 100">'
+                '<span class="ocr_line">' + ' '.join(
+                    f'<span class="ocr_word" title="bbox {10 + 40 * i} 10 '
+                    f'{40 + 40 * i} 60">{w}</span>'
+                    for i, w in enumerate(words)) + '</span></div>')
+
+    def doc(*pages):
+        return ('<html><head><meta name="ocr-capabilities" content="x"/>'
+                '</head><body>' + ''.join(pages) + '</body></html>')
+
+    ts = datetime.datetime(2025, 1, 1)
+    df = spark.createDataFrame([
+        ('c1', 1, 'user', doc(page(['aa', 'bb'])), None, ts),
+        ('c1', 2, 'assistant',
+         doc(page(['cc']), page(['dd', 'ee', 'ff'])), None, ts),
+        ('c2', 1, 'user', doc(page([])), None, ts),
+        ('c2', 2, 'user', None, None, ts),
+    ], schema=TRANSCRIPTS_DDL)
+    runs = {mode: pipeline.extract_turns(df, emit_spans=mode,
+                                         emit_sexpr=False)
+            for mode in (True, 'words', False)}
+    metrics = {
+        mode: {r.conv_id: r for r in
+               pipeline.extraction_metrics(run).collect()}
+        for mode, run in runs.items()}
+
+    def totals(mode, field):
+        return sum(getattr(r, field) for r in metrics[mode].values())
+
+    for field in ('n_turns', 'n_errors', 'n_chars'):
+        by_conv = {c: getattr(r, field) for c, r in metrics[True].items()}
+        for mode in ('words', False):
+            assert {c: getattr(r, field)
+                    for c, r in metrics[mode].items()} == by_conv
+    assert totals(True, 'n_turns') == 4
+    assert totals(True, 'n_errors') == 1
+    n_words = pipeline.word_spans(runs['words']).count()
+    assert totals('words', 'n_spans') == n_words == 6
+    assert totals(True, 'n_spans') > n_words
+    assert totals(False, 'n_spans') == 0
+
+
+@pytest.mark.parametrize('bad', ['packed', 'chars', 'Words', 1, None])
+def test_emit_spans_rejects_values_outside_the_three_payloads(spark, bad):
+    from ocrodjvu_spark.functions.extract import (extract_one,
+                                                  make_extract_udf)
+    with pytest.raises(ValueError, match='emit_spans'):
+        extract_one('<html><body></body></html>', emit_spans=bad)
+    with pytest.raises(ValueError, match='emit_spans'):
+        extract_one(None, emit_spans=bad)
+    with pytest.raises(ValueError, match='emit_spans'):
+        make_extract_udf(emit_spans=bad)
+    df = spark.createDataFrame([], schema=TRANSCRIPTS_DDL)
+    with pytest.raises(ValueError, match='emit_spans'):
+        pipeline.extract_turns(df, emit_spans=bad)
 
 
 def test_extract_stage_has_no_shuffle(spark):

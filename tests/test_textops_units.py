@@ -604,6 +604,30 @@ def test_script_profile_dominant_and_fractions(spark):
     assert row.dominant is None and row.latin_frac is None
 
 
+def test_dot_takes_flat_chain_only_for_column_references(spark):
+    # the flat element_at chain is picked from the Column's expression:
+    # two column references get it; a computed argument keeps the fold,
+    # which binds the expression once instead of inlining it per term
+    from pyspark.sql import functions as F
+    from ocrodjvu_spark.functions import similarity
+    a = [(i % 7 - 3) / 4 for i in range(similarity.EMBED_DIM)]
+    b = [(i % 5 - 2) / 8 for i in range(similarity.EMBED_DIM)]
+    df = spark.createDataFrame([(a, b)], 'a array<double>, b array<double>')
+    attrs = df.select(similarity.dot(F.col('a'), F.col('b')).alias('d'))
+    computed = df.select(similarity.dot(
+        similarity.as_double(F.col('a')), F.col('b')).alias('d'))
+
+    def plan(q):
+        return q._jdf.queryExecution().analyzed().toString()
+
+    assert plan(attrs).count('element_at(') == 2 * similarity.EMBED_DIM
+    assert 'aggregate(' in plan(attrs)  # the fold for other lengths
+    assert 'element_at(' not in plan(computed)
+    assert 'aggregate(' in plan(computed)
+    exact = sum(x * y for x, y in zip(a, b))
+    assert attrs.first().d == computed.first().d == exact
+
+
 def test_ann_recall_bounds(spark):
     from ocrodjvu_spark.functions import similarity
     from ocrodjvu_spark.sources import transcripts as T
